@@ -51,21 +51,15 @@ def main() -> None:
     print("batch 1 near-dups vs corpus:", hits1)
 
     dedup.append_lsh_index(spark, batch1, "text", "doc_id", name)
-    spark.catalog.refreshTable(bands_t)
-    spark.catalog.refreshTable(grams_t)
     hits2 = dedup.screen_against_index(
         spark.table(bands_t), spark.table(grams_t), batch2, "text", "doc_id"
     ).count()
     print("batch 2 near-dups vs corpus+batch1:", hits2)
 
     dedup.compact_lsh_index(spark, name)
-    spark.catalog.refreshTable(bands_t)
-    spark.catalog.refreshTable(grams_t)
     print("compacted: one file per bucket again")
 
     dedup.delete_from_lsh_index(spark, batch1.select("doc_id"), name)
-    spark.catalog.refreshTable(bands_t)
-    spark.catalog.refreshTable(grams_t)
     print("takedown: batch-1 docs removed from the index")
 
     # --- ANN twin over the embeddings table ---

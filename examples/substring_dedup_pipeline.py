@@ -69,7 +69,6 @@ def main() -> None:
     s1 = D.screen_substrings_against_index(spark, batch1, "text", "doc_id", name)
     print(f"[4] batch 1: {s1.count()} duplicated spans vs corpus")
     D.append_substring_index(spark, batch1, "text", "doc_id", name)
-    spark.catalog.refreshTable(f"sub_grams_{name}")
     s2 = D.screen_substrings_against_index(spark, batch2, "text", "doc_id", name)
     print(f"[4] batch 2: {s2.count()} duplicated spans vs corpus ∪ batch 1")
     D.drop_substring_index(spark, name)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from sdc_spark.materialize import materialize as _materialize
 from sdc_spark.materialize import materialize_lazy as _materialize_lazy
 from sdc_spark.materialize import unmaterialize as _unmaterialize
+from sdc_spark.operators import maintenance as _m
 from sdc_spark.operators.scan import spread_scan
 
 
@@ -472,42 +473,6 @@ def keep_best_in_cluster(
         F.col("__s").alias(score_col),
         (F.row_number().over(w) == 1).alias("keep"),
     )
-
-
-def _simhash_bits(g: Column, bits: int) -> Column:
-    """±1 vote vector from the shingle's 64-bit hash (bit positions are
-    Python literals — shift counts must be ints)."""
-    h = F.xxhash64(g)
-    return F.array(
-        *[
-            F.when(
-                F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1).cast("long")
-            ).otherwise(F.lit(-1).cast("long"))
-            for b in range(bits)
-        ]
-    )
-
-
-def simhash_votes(grams: Column, bits: int = 64) -> Column:
-    """Per-bit vote tally over shingle hashes (array<long> of length bits)."""
-    return F.aggregate(
-        grams,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, g: F.zip_with(acc, _simhash_bits(g, bits), lambda a, v: a + v),
-    )
-
-
-def pack_votes(votes: Column, bits: int = 64) -> Column:
-    """Majority votes → packed signed-64 signature. The bit weights are
-    Python-side constants (shiftleft needs a literal shift count); bit 63
-    is long-min to stay in signed range."""
-    sig = F.lit(0).cast("long")
-    for b in range(bits):
-        weight = (1 << b) if b < 63 else -(1 << 63)
-        sig = sig.bitwiseOR(
-            F.when(F.get(votes, b) > 0, F.lit(weight).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return sig
 
 
 def simhash_near_dups(
@@ -1039,7 +1004,51 @@ def gram_index(
     return _hashed_grams(df, text_col, id_col, ngram).distinct()
 
 
-_LSH_INDEX_BUCKETS = 16  # per-table bucket count; raise with corpus size
+def _save_lsh(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    name: str,
+    num_hashes: int,
+    bands: int,
+    ngram: int,
+    path_root: str,
+    mode: str,
+    hashed_grams: "DataFrame | None" = None,
+) -> None:
+    """Write (``mode="overwrite"``) or append the band and gram rows of
+    ``df``. ONE hashed-gram scan feeds both tables, and the two table
+    writes are independent, so they overlap: the second's tasks
+    back-fill the executors the first's commit tail leaves idle (guide
+    §2.6). A caller-supplied ``hashed_grams`` frame stays owned by the
+    caller; one derived here is always released, even when a write
+    fails."""
+    own_base = hashed_grams is None
+    base = (
+        _hashed_grams(df, text_col, id_col, ngram).transform(_materialize)
+        if own_base
+        else hashed_grams
+    )
+    try:
+        _m.run_concurrently(
+            lambda: _m.save_table(
+                _minhash_bands(base, num_hashes, bands),
+                f"lsh_bands_{name}",
+                f"{path_root}/{name}/bands",
+                ("band", "bhash"),
+                mode,
+            ),
+            lambda: _m.save_table(
+                base.distinct(),
+                f"lsh_grams_{name}",
+                f"{path_root}/{name}/grams",
+                ("doc",),
+                mode,
+            ),
+        )
+    finally:
+        if own_base:
+            _unmaterialize(base)
 
 
 def write_lsh_index(
@@ -1051,71 +1060,27 @@ def write_lsh_index(
     num_hashes: int = 128,
     bands: int = 32,
     ngram: int = 3,
-    n_buckets: int = _LSH_INDEX_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_lshidx",
+    path_root: str = _m._DEFAULT_ROOTS["lsh"],
     overwrite: bool = False,
 ) -> tuple[str, str]:
     """Persist the corpus near-dedup index as BUCKETED tables and return
     the (band_table, gram_table) names for ``spark.table``.
 
-    Layout is the whole point: the band table is bucketed+sorted on
-    (band, bhash) — exactly the band-join keys — and the gram table on
-    doc — the verify-aggregation key — so every subsequent
-    ``screen_against_index`` call reads the corpus side with NO Exchange:
-    only the incoming batch is shuffled, which is the property that makes
-    per-batch screening O(|batch|) at a 100-TB corpus (an unbucketed
-    index re-shuffles the full corpus index on every batch). Writes are
-    repartitioned onto the bucket columns first so each append lays down
-    ~one file per bucket instead of tasks x buckets small files.
+    The band table is bucketed+sorted on (band, bhash) — exactly the
+    band-join keys — and the gram table on doc — the verify-aggregation
+    key — so every ``screen_against_index`` call reads the corpus side
+    with NO Exchange (layout and lifecycle: operators/maintenance.py).
 
     Idempotent: existing tables are reused unless ``overwrite``. Appends
-    go through ``append_lsh_index`` (same bucket spec, so the layout —
-    and the zero-Exchange plan — survives index growth)."""
+    go through ``append_lsh_index``."""
     bands_t = f"lsh_bands_{name}"
     grams_t = f"lsh_grams_{name}"
     have = spark.catalog.tableExists(bands_t) and spark.catalog.tableExists(grams_t)
     if have and not overwrite:
         return bands_t, grams_t
-    # ONE hashed-gram scan feeds both tables (band signatures and the
-    # verify-side gram set) — un-shared, the normalize+shingle+hash pass
-    # over the corpus ran twice per index build, i.e. one redundant
-    # full-text scan at 100 TB (minhash_lsh_pairs already shares this
-    # scan; the write path now applies the same discipline).
-    base = _hashed_grams(df, text_col, id_col, ngram).transform(_materialize)
-
-    def _write_bands() -> None:
-        (
-            _minhash_bands(base, num_hashes, bands)
-            .repartition(n_buckets, "band", "bhash")
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "band", "bhash")
-            .sortBy("band", "bhash")
-            .option("path", f"{path_root}/{name}/bands")
-            .saveAsTable(bands_t)
-        )
-
-    def _write_grams() -> None:
-        (
-            base.distinct()
-            .repartition(n_buckets, "doc")
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "doc")
-            .sortBy("doc")
-            .option("path", f"{path_root}/{name}/grams")
-            .saveAsTable(grams_t)
-        )
-
-    # the two table writes read the same materialized base and are
-    # independent — overlap them so the second's tasks back-fill the
-    # executors the first's commit tail leaves idle (guide §2.6)
-    from sdc_spark.operators.maintenance import run_concurrently
-
-    try:
-        run_concurrently(_write_bands, _write_grams)
-    finally:
-        # always release the materialized full-corpus hashed-gram blocks
-        # — a write failure must not leak them for the session's lifetime
-        _unmaterialize(base)
+    _save_lsh(
+        df, text_col, id_col, name, num_hashes, bands, ngram, path_root, "overwrite"
+    )
     return bands_t, grams_t
 
 
@@ -1128,16 +1093,11 @@ def append_lsh_index(
     num_hashes: int = 128,
     bands: int = 32,
     ngram: int = 3,
-    n_buckets: int = _LSH_INDEX_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_lshidx",
+    path_root: str = _m._DEFAULT_ROOTS["lsh"],
     hashed_grams: "DataFrame | None" = None,
 ) -> None:
     """Append one ingested batch's band+gram rows to a persisted index
-    written by ``write_lsh_index`` — the index is never rewritten; the
-    bucket spec matches the original so co-location is preserved and the
-    append adds ~one file per bucket (repartition-first), not a
-    small-files blizzard. Serialized against concurrent compaction via
-    the index maintenance lock (operators/maintenance.py).
+    written by ``write_lsh_index``, under the index maintenance lock.
 
     ``hashed_grams``: a caller that already SCREENED the batch can pass
     the materialized ``hashed_grams()`` frame it screened with, so the
@@ -1145,127 +1105,37 @@ def append_lsh_index(
     instead of once per operation (one redundant full batch scan saved
     at corpus scale). The frame must match (batch, text_col, id_col,
     ngram); ownership stays with the caller (not released here)."""
-    from sdc_spark.operators.maintenance import index_lock, run_concurrently
-
-    own_base = hashed_grams is None
-    with index_lock(f"{path_root}/{name}"):
-        # same shared-scan discipline as write_lsh_index: one hashed-gram
-        # pass over the batch feeds both appends — and the two appends
-        # target different tables, so they overlap (guide §2.6)
-        base = (
-            _hashed_grams(batch, text_col, id_col, ngram).transform(_materialize)
-            if own_base
-            else hashed_grams
+    with _m.maintaining("lsh", f"{path_root}/{name}"):
+        _save_lsh(
+            batch, text_col, id_col, name, num_hashes, bands, ngram, path_root,
+            "append", hashed_grams,
         )
-
-        def _append_bands() -> None:
-            (
-                _minhash_bands(base, num_hashes, bands)
-                .repartition(n_buckets, "band", "bhash")
-                .write.mode("append")
-                .bucketBy(n_buckets, "band", "bhash")
-                .sortBy("band", "bhash")
-                .saveAsTable(f"lsh_bands_{name}")
-            )
-
-        def _append_grams() -> None:
-            (
-                base.distinct()
-                .repartition(n_buckets, "doc")
-                .write.mode("append")
-                .bucketBy(n_buckets, "doc")
-                .sortBy("doc")
-                .saveAsTable(f"lsh_grams_{name}")
-            )
-
-        try:
-            run_concurrently(_append_bands, _append_grams)
-        finally:
-            if own_base:
-                _unmaterialize(base)
-
-
-def _rewrite_lsh_table(
-    spark,
-    table: str,
-    df: DataFrame,
-    keys: tuple[str, ...],
-    path: str,
-    n_buckets: int,
-) -> None:
-    """Atomic-enough table rewrite for index maintenance: the new content
-    is EAGERLY materialized with lineage truncation FIRST (a
-    lineage-kept persist would try to recompute lost blocks from the
-    files this function deletes), then the table+files are replaced with
-    the same bucket spec — so compaction/deletion never change the plan
-    shape consumers rely on."""
-    import shutil
-
-    from sdc_spark.materialize import materialize
-
-    # The repartition MUST survive into the staged frame (it is what
-    # bounds output files at one per bucket), so callers pass content
-    # read from the RAW parquet path, not the bucketed table: on top of
-    # a bucketed scan Catalyst partially elides the equal-key shuffle
-    # and the staged partitioning ends up neither the scan's nor the
-    # requested one.
-    staged = materialize(df.repartition(n_buckets, *keys), truncate=True)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    shutil.rmtree(path, ignore_errors=True)
-    w = staged.write.mode("overwrite").bucketBy(n_buckets, *keys).sortBy(*keys)
-    w.option("path", path).saveAsTable(table)
 
 
 def compact_lsh_index(
-    spark,
-    name: str,
-    n_buckets: int = _LSH_INDEX_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_lshidx",
+    spark, name: str, path_root: str = _m._DEFAULT_ROOTS["lsh"]
 ) -> None:
-    """Compact a persisted index back to ~one file per bucket. Every
-    append adds a file per bucket, so a year of batches decays scan
-    latency (open/footer cost per file) even though the bucket layout —
-    and the zero-Exchange screen plan — survives; schedule this like any
-    LSM-ish maintenance. Pending tombstones (deferred takedowns) are
-    applied physically here and the log cleared; with none pending,
-    contents are bit-identical before/after (pinned by test). Holds the
-    index maintenance lock across the whole stage-then-replace window."""
-    from sdc_spark.operators.maintenance import index_lock
-
-    from sdc_spark.operators.maintenance import run_concurrently
-
-    with index_lock(f"{path_root}/{name}"):
+    """Compact a persisted index back to ~one file per bucket, applying
+    pending tombstones physically and clearing the log; with none
+    pending, contents are bit-identical before/after (pinned by test).
+    The two table rewrites touch disjoint tables and paths and each
+    stages its content before dropping anything, so they overlap."""
+    with _m.maintaining("lsh", f"{path_root}/{name}") as root:
         tomb = lsh_tombstones(spark, name)
-        bands = spark.read.parquet(f"{path_root}/{name}/bands")
-        grams = spark.read.parquet(f"{path_root}/{name}/grams")
-        if tomb is not None:
-            bands = bands.join(tomb, "doc", "left_anti")
-            grams = grams.join(tomb, "doc", "left_anti")
-        # the two rewrites touch disjoint tables/paths and each stages
-        # its content before dropping anything — overlap them (§2.6)
-        run_concurrently(
-            lambda: _rewrite_lsh_table(
-                spark,
-                f"lsh_bands_{name}",
-                bands,
-                ("band", "bhash"),
-                f"{path_root}/{name}/bands",
-                n_buckets,
-            ),
-            lambda: _rewrite_lsh_table(
-                spark,
-                f"lsh_grams_{name}",
-                grams,
-                ("doc",),
-                f"{path_root}/{name}/grams",
-                n_buckets,
-            ),
+
+        def rewrite(sub: str, keys: tuple[str, ...]) -> None:
+            content = spark.read.parquet(f"{root}/{sub}")
+            if tomb is not None:
+                content = content.join(tomb, "doc", "left_anti")
+            table = f"lsh_{sub}_{name}"
+            _m.replace_table(spark, content, table, f"{root}/{sub}", keys)
+
+        _m.run_concurrently(
+            lambda: rewrite("bands", ("band", "bhash")),
+            lambda: rewrite("grams", ("doc",)),
         )
         if tomb is not None:
-            import shutil
-
-            spark.sql(f"DROP TABLE IF EXISTS lsh_dels_{name}")
-            shutil.rmtree(f"{path_root}/{name}/tombstones", ignore_errors=True)
+            _m.clear_logs(spark, "lsh", path_root, name)
 
 
 def lsh_tombstones(spark, name: str) -> "DataFrame | None":
@@ -1273,86 +1143,36 @@ def lsh_tombstones(spark, name: str) -> "DataFrame | None":
     ids, or None when no takedown is pending. Pass it to
     ``screen_against_index(tombstones=...)``; ``compact_lsh_index``
     applies it physically and clears it."""
-    t = f"lsh_dels_{name}"
-    if not spark.catalog.tableExists(t):
-        return None
-    return spark.table(t)
+    return _m.read_log(spark, f"lsh_dels_{name}")
 
 
 def delete_from_lsh_index(
     spark,
     doc_ids: DataFrame,
     name: str,
-    n_buckets: int = _LSH_INDEX_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_lshidx",
-    deferred: bool = True,
+    path_root: str = _m._DEFAULT_ROOTS["lsh"],
 ) -> None:
     """Remove documents from a persisted index (takedown/expiry — the
-    compliance path every long-lived corpus index needs).
-
-    Default is a TOMBSTONE log: the id batch appends to a tiny
-    ``lsh_dels_<name>`` side table — write cost O(|batch|); the band and
-    gram tables are untouched. Screens exclude tombstoned docs at serve
-    time (``screen_against_index`` anti-joins the log against the
-    batch-sized candidate set, AFTER the zero-Exchange bucket join — so
-    the filter costs nothing at corpus scale); physical deletion is
-    amortized into ``compact_lsh_index``, after which the index is
-    bit-identical to one built without those docs (the signature family
-    is content-deterministic — pinned by test).
-
-    ``deferred=False`` keeps the eager full-rewrite for storage-level
-    compliance wipes. No join-strategy hints on any path: a bulk
-    expiry's id set can be corpus-scale — AQE picks."""
-    from sdc_spark.operators.maintenance import index_lock
-
+    compliance path every long-lived corpus index needs) by appending
+    the not-yet-logged ids to the ``lsh_dels_<name>`` tombstone log:
+    write cost O(|batch|), the band and gram tables are untouched.
+    Screens exclude tombstoned docs at serve time (``screen_against_index``
+    anti-joins the log against the batch-sized candidate set, AFTER the
+    zero-Exchange bucket join); ``compact_lsh_index`` deletes them
+    physically, after which the index is bit-identical to one built
+    without those docs (the signature family is content-deterministic —
+    pinned by test)."""
     ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("doc")).distinct()
-    with index_lock(f"{path_root}/{name}"):
-        if deferred:
-            from sdc_spark.materialize import materialize
-
-            t = f"lsh_dels_{name}"
-            prior = lsh_tombstones(spark, name)
-            if prior is not None:
-                ids = ids.join(prior, "doc", "left_anti")
-            fresh = materialize(ids, truncate=True)
-            if spark.catalog.tableExists(t):
-                fresh.write.mode("append").saveAsTable(t)
-            else:
-                (
-                    fresh.write.mode("overwrite")
-                    .option("path", f"{path_root}/{name}/tombstones")
-                    .saveAsTable(t)
-                )
-            return
-        _rewrite_lsh_table(
-            spark,
-            f"lsh_bands_{name}",
-            spark.read.parquet(f"{path_root}/{name}/bands").join(
-                ids, "doc", "left_anti"
-            ),
-            ("band", "bhash"),
-            f"{path_root}/{name}/bands",
-            n_buckets,
-        )
-        _rewrite_lsh_table(
-            spark,
-            f"lsh_grams_{name}",
-            spark.read.parquet(f"{path_root}/{name}/grams").join(
-                ids, "doc", "left_anti"
-            ),
-            ("doc",),
-            f"{path_root}/{name}/grams",
-            n_buckets,
-        )
+    with _m.maintaining("lsh", f"{path_root}/{name}") as root:
+        fresh = _m.unlogged(spark, ids, f"lsh_dels_{name}")
+        _m.append_log(spark, fresh, f"lsh_dels_{name}", f"{root}/tombstones")
 
 
-def drop_lsh_index(spark, name: str, path_root: str = "/tmp/sdc_spark_lshidx") -> None:
+def drop_lsh_index(
+    spark, name: str, path_root: str = _m._DEFAULT_ROOTS["lsh"]
+) -> None:
     """Drop a persisted index's tables and files (fresh-rebuild path)."""
-    import shutil
-
-    for t in (f"lsh_bands_{name}", f"lsh_grams_{name}", f"lsh_dels_{name}"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    shutil.rmtree(f"{path_root}/{name}", ignore_errors=True)
+    _m.drop_index(spark, "lsh", path_root, name)
 
 
 def incremental_near_dups(
@@ -1870,7 +1690,18 @@ def substring_decontaminate(
     return _cut_spans(base, spans)
 
 
-_SUB_INDEX_BUCKETS = 16  # per-table bucket count; raise with corpus size
+def _save_substring(
+    positions: DataFrame, name: str, path_root: str, mode: str
+) -> None:
+    """Write (``mode="overwrite"``) or append the (h, cnt) gram counts of
+    a (doc, pos, h) positions frame, bucketed on ``h``."""
+    _m.save_table(
+        positions.groupBy("h").agg(F.count(F.lit(1)).alias("cnt")),
+        f"sub_grams_{name}",
+        f"{path_root}/{name}/grams",
+        ("h",),
+        mode,
+    )
 
 
 def write_substring_index(
@@ -1880,13 +1711,12 @@ def write_substring_index(
     id_col: str,
     name: str,
     min_len: int = 50,
-    n_buckets: int = _SUB_INDEX_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_subidx",
+    path_root: str = _m._DEFAULT_ROOTS["substring"],
     overwrite: bool = False,
 ) -> str:
     """Persist the corpus's COUNTED ``min_len``-gram hash multiset —
-    (h, cnt) rows, cnt = total occurrences — as a BUCKETED table (on
-    ``h``, the screen-join key) and return the table name. This is the
+    (h, cnt) rows, cnt = total occurrences — as a table bucketed on
+    ``h`` (the screen-join key) and return the table name. This is the
     whole persisted state of INCREMENTAL exact substring dedup: a batch
     position is duplicated in corpus ∪ batch iff its gram hash is in
     this set OR repeats within the batch, so membership (16 bytes per
@@ -1894,26 +1724,12 @@ def write_substring_index(
     The counts exist ONLY for takedown bookkeeping
     (``delete_from_substring_index`` logs negative counts; a gram dies
     when its net count reaches zero) — screens never aggregate them.
-    Bucketing means every subsequent
-    ``screen_substrings_against_index`` reads the corpus side with NO
-    Exchange; only the incoming batch shuffles — per-batch screening is
-    O(|batch|) at a 100-TB corpus. Same layout discipline as
-    ``write_lsh_index`` above (repartition-first ⇒ ~one file per
-    bucket)."""
+    Layout and lifecycle: operators/maintenance.py."""
     table = f"sub_grams_{name}"
     if spark.catalog.tableExists(table) and not overwrite:
         return table
-    (
-        _kgram_positions(df, text_col, id_col, int(min_len))
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .repartition(n_buckets, "h")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "h")
-        .sortBy("h")
-        .option("path", f"{path_root}/{name}/grams")
-        .saveAsTable(table)
-    )
+    grams = _kgram_positions(df, text_col, id_col, int(min_len))
+    _save_substring(grams, name, path_root, "overwrite")
     return table
 
 
@@ -1924,72 +1740,47 @@ def append_substring_index(
     id_col: str,
     name: str,
     min_len: int = 50,
-    n_buckets: int = _SUB_INDEX_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_subidx",
+    path_root: str = _m._DEFAULT_ROOTS["substring"],
     kgram_positions: "DataFrame | None" = None,
 ) -> None:
-    """Append one ingested batch's (h, cnt) gram counts under the same
-    bucket spec (co-location — and the zero-Exchange screen plan —
-    survives growth; ~one new file per bucket per append). Hashes the
-    corpus already holds are appended again rather than merged: extra
-    rows cannot change a membership semi-join (and counts are summed
-    wherever they matter), while merging would cost a full index
-    rewrite per batch — ``compact_substring_index`` merges them during
-    scheduled maintenance instead. Serialized against concurrent
-    compaction via the index maintenance lock.
+    """Append one ingested batch's (h, cnt) gram counts, under the index
+    maintenance lock. Hashes the corpus already holds are appended again
+    rather than merged: extra rows cannot change a membership semi-join
+    (and counts are summed wherever they matter), while merging would
+    cost a full index rewrite per batch — ``compact_substring_index``
+    merges them during scheduled maintenance instead.
 
     ``kgram_positions``: a caller that already SCREENED the batch can
     pass the materialized ``kgram_positions()`` frame it screened with,
     so the per-character explode+hash pass over the batch text runs
     once per batch instead of once per operation. Must match
     (batch, text_col, id_col, min_len); caller owns its release."""
-    from sdc_spark.operators.maintenance import index_lock
-
     src = (
         kgram_positions
         if kgram_positions is not None
         else _kgram_positions(batch, text_col, id_col, int(min_len))
     )
-    with index_lock(f"{path_root}/{name}"):
-        (
-            src.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .repartition(n_buckets, "h")
-            .write.mode("append")
-            .bucketBy(n_buckets, "h")
-            .sortBy("h")
-            .saveAsTable(f"sub_grams_{name}")
-        )
+    with _m.maintaining("substring", f"{path_root}/{name}"):
+        _save_substring(src, name, path_root, "append")
 
 
 def compact_substring_index(
-    spark,
-    name: str,
-    n_buckets: int = _SUB_INDEX_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_subidx",
+    spark, name: str, path_root: str = _m._DEFAULT_ROOTS["substring"]
 ) -> None:
     """Compact back to ~one file per bucket AND merge cross-append rows
     into one (h, cnt) row per gram (summed counts). Pending takedowns
     (``delete_from_substring_index``'s negative-count log) are applied
     physically here — net-zero grams drop out — and the delete-side
-    tables are cleared. Same staged-rewrite discipline as
-    ``compact_lsh_index`` — raw-path read, eager materialization before
-    the old files are deleted. Holds the index maintenance lock across
-    the stage-then-replace window."""
-    from sdc_spark.operators.maintenance import index_lock
-
-    with index_lock(f"{path_root}/{name}"):
+    tables are cleared."""
+    with _m.maintaining("substring", f"{path_root}/{name}") as root:
         merged = (
-            spark.read.parquet(f"{path_root}/{name}/grams")
+            spark.read.parquet(f"{root}/grams")
             .groupBy("h")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        dels_t = f"sub_dels_{name}"
-        had_dels = spark.catalog.tableExists(dels_t)
-        if had_dels:
-            lognet = (
-                spark.table(dels_t).groupBy("h").agg(F.sum("cnt").alias("dcnt"))
-            )
+        dels = _m.read_log(spark, f"sub_dels_{name}")
+        if dels is not None:
+            lognet = dels.groupBy("h").agg(F.sum("cnt").alias("dcnt"))
             merged = (
                 merged.join(lognet, "h", "left")
                 .select(
@@ -2000,24 +1791,9 @@ def compact_substring_index(
                 )
                 .filter(F.col("cnt") > 0)
             )
-        _rewrite_lsh_table(
-            spark,
-            f"sub_grams_{name}",
-            merged,
-            ("h",),
-            f"{path_root}/{name}/grams",
-            n_buckets,
-        )
-        if had_dels:
-            import shutil
-
-            for t, sub in (
-                (dels_t, "dels"),
-                (f"sub_dead_{name}", "dead"),
-                (f"sub_deldocs_{name}", "deldocs"),
-            ):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-                shutil.rmtree(f"{path_root}/{name}/{sub}", ignore_errors=True)
+        _m.replace_table(spark, merged, f"sub_grams_{name}", f"{root}/grams", ("h",))
+        if dels is not None:
+            _m.clear_logs(spark, "substring", path_root, name)
 
 
 def delete_from_substring_index(
@@ -2027,7 +1803,7 @@ def delete_from_substring_index(
     id_col: str,
     name: str,
     min_len: int = 50,
-    path_root: str = "/tmp/sdc_spark_subidx",
+    path_root: str = _m._DEFAULT_ROOTS["substring"],
 ) -> None:
     """Takedown for the persisted ExactSubstr index. The index stores no
     doc ids — only (h, cnt) gram counts — so removal is COUNT
@@ -2048,74 +1824,39 @@ def delete_from_substring_index(
     takedowns): docs passed here must currently be IN the index, each
     at most once — a ``sub_deldocs_<name>`` id log makes re-deletes
     no-ops."""
-    from sdc_spark.operators.maintenance import index_lock
-
-    with index_lock(f"{path_root}/{name}"):
-        _delete_from_substring_index_locked(
-            spark, removed_docs, text_col, id_col, name, min_len, path_root
+    with _m.maintaining("substring", f"{path_root}/{name}") as root:
+        fresh_ids = _m.unlogged(
+            spark,
+            removed_docs.select(F.col(id_col).alias("doc")).distinct(),
+            f"sub_deldocs_{name}",
         )
-
-
-def _delete_from_substring_index_locked(
-    spark, removed_docs, text_col, id_col, name, min_len, path_root
-) -> None:
-    k = int(min_len)
-    deldocs_t = f"sub_deldocs_{name}"
-    ids = removed_docs.select(F.col(id_col).alias("doc")).distinct()
-    if spark.catalog.tableExists(deldocs_t):
-        ids = ids.join(spark.table(deldocs_t), "doc", "left_anti")
-    fresh_ids = _materialize_iter(ids)
-    batch = removed_docs.join(
-        fresh_ids.select(F.col("doc").alias(id_col)), id_col, "left_semi"
-    )
-    negs = (
-        _kgram_positions(batch, text_col, id_col, k)
-        .groupBy("h")
-        .agg((-F.count(F.lit(1))).alias("cnt"))
-    )
-    dels_t = f"sub_dels_{name}"
-    if spark.catalog.tableExists(dels_t):
-        negs.write.mode("append").saveAsTable(dels_t)
-    else:
-        (
-            negs.write.mode("overwrite")
-            .option("path", f"{path_root}/{name}/dels")
-            .saveAsTable(dels_t)
+        batch = removed_docs.join(
+            fresh_ids.select(F.col("doc").alias(id_col)), id_col, "left_semi"
         )
-    if spark.catalog.tableExists(deldocs_t):
-        fresh_ids.write.mode("append").saveAsTable(deldocs_t)
-    else:
-        (
-            fresh_ids.write.mode("overwrite")
-            .option("path", f"{path_root}/{name}/deldocs")
-            .saveAsTable(deldocs_t)
+        negs = (
+            _kgram_positions(batch, text_col, id_col, int(min_len))
+            .groupBy("h")
+            .agg((-F.count(F.lit(1))).alias("cnt"))
         )
-    # refresh the dead set from net counts over the log's suspect hashes
-    # (the gram-table read is semi-join-pruned to those hashes; no hint —
-    # a bulk expiry's suspect set can be large, AQE picks)
-    lognet = spark.table(dels_t).groupBy("h").agg(F.sum("cnt").alias("dcnt"))
-    base = (
-        spark.table(f"sub_grams_{name}")
-        .join(lognet.select("h"), "h", "left_semi")
-        .groupBy("h")
-        .agg(F.sum("cnt").alias("bcnt"))
-    )
-    dead = (
-        base.join(lognet, "h")
-        .filter(F.col("bcnt") + F.col("dcnt") <= 0)
-        .select("h")
-    )
-    staged_dead = _materialize_iter(dead)
-    dead_t = f"sub_dead_{name}"
-    spark.sql(f"DROP TABLE IF EXISTS {dead_t}")
-    import shutil
-
-    shutil.rmtree(f"{path_root}/{name}/dead", ignore_errors=True)
-    (
-        staged_dead.write.mode("overwrite")
-        .option("path", f"{path_root}/{name}/dead")
-        .saveAsTable(dead_t)
-    )
+        dels_t = f"sub_dels_{name}"
+        _m.append_log(spark, negs, dels_t, f"{root}/dels")
+        _m.append_log(spark, fresh_ids, f"sub_deldocs_{name}", f"{root}/deldocs")
+        # refresh the dead set from net counts over the log's suspect
+        # hashes (the gram-table read is semi-join-pruned to those
+        # hashes; no hint — a bulk expiry's suspect set can be large)
+        lognet = spark.table(dels_t).groupBy("h").agg(F.sum("cnt").alias("dcnt"))
+        base = (
+            spark.table(f"sub_grams_{name}")
+            .join(lognet.select("h"), "h", "left_semi")
+            .groupBy("h")
+            .agg(F.sum("cnt").alias("bcnt"))
+        )
+        dead = (
+            base.join(lognet, "h")
+            .filter(F.col("bcnt") + F.col("dcnt") <= 0)
+            .select("h")
+        )
+        _m.replace_table(spark, dead, f"sub_dead_{name}", f"{root}/dead")
 
 
 def substring_membership(spark, name: str) -> DataFrame:
@@ -2133,19 +1874,10 @@ def substring_membership(spark, name: str) -> DataFrame:
 
 
 def drop_substring_index(
-    spark, name: str, path_root: str = "/tmp/sdc_spark_subidx"
+    spark, name: str, path_root: str = _m._DEFAULT_ROOTS["substring"]
 ) -> None:
     """Drop a persisted substring index's tables and files."""
-    import shutil
-
-    for t in (
-        f"sub_grams_{name}",
-        f"sub_dels_{name}",
-        f"sub_dead_{name}",
-        f"sub_deldocs_{name}",
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    shutil.rmtree(f"{path_root}/{name}", ignore_errors=True)
+    _m.drop_index(spark, "substring", path_root, name)
 
 
 def screen_substrings_against_index(

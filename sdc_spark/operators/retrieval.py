@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from sdc_spark.materialize import materialize as _materialize
 from sdc_spark.materialize import materialize_lazy as _materialize_lazy
 from sdc_spark.materialize import unmaterialize as _unmaterialize
+from sdc_spark.operators import maintenance as _m
 from sdc_spark.operators.dedup import normalized_text
 
 
@@ -223,9 +224,6 @@ def bm25_multi(
     )
 
 
-_POSTING_BUCKETS = 16  # per-table bucket count; raise with corpus size
-
-
 def posting_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Materializable lexical index: (doc, token, tf, dl) posting rows
     with the document length DENORMALIZED onto every posting (classic
@@ -242,26 +240,54 @@ def posting_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return postings.join(dl, "doc")
 
 
+def _stats_row(posted: DataFrame) -> DataFrame:
+    """The one additive (n_docs, sum_dl) stats row of a posting frame."""
+    return (
+        posted.groupBy("doc")
+        .agg(F.max("dl").alias("dl"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
+    )
+
+
+def _save_postings(posted: DataFrame, name: str, path_root: str, mode: str) -> None:
+    """Write (``mode="overwrite"``) or append a MATERIALIZED posting
+    frame and its stats row, then release the frame (even on failure —
+    leaked, it pins a corpus-sized frame for the session). Both writes
+    read the one frame and target disjoint tables, so they overlap
+    (optimization guide §2.6)."""
+    root = f"{path_root}/{name}"
+    try:
+        _m.run_concurrently(
+            lambda: _m.save_table(
+                posted, f"postings_{name}", f"{root}/postings", ("token",), mode
+            ),
+            lambda: _m.save_table(
+                _stats_row(posted), f"lexstats_{name}", f"{root}/stats", mode=mode
+            ),
+        )
+    finally:
+        _unmaterialize(posted)
+
+
 def write_posting_index(
     spark,
     df: DataFrame,
     text_col: str,
     id_col: str,
     name: str,
-    n_buckets: int = _POSTING_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_postidx",
+    path_root: str = _m._DEFAULT_ROOTS["posting"],
     overwrite: bool = False,
 ) -> tuple[str, str]:
-    """Persist the corpus posting list as a BUCKETED table (+ a tiny
-    additive stats table) and return (postings_table, stats_table).
-
-    Postings are bucketed+sorted on token — the query-join key — so a
-    workload of queries joins the index co-located; the corpus text is
-    never re-tokenized after build. The stats table holds ADDITIVE rows
-    (n_docs, sum_dl) — one per ingest — so appends never rewrite it and
-    readers reduce it to (N, avgdl) with a sum over a handful of rows.
+    """Persist the corpus posting list as a table bucketed+sorted on
+    token — the query-join key, so a workload of queries joins the index
+    co-located and the corpus text is never re-tokenized after build —
+    plus a tiny stats table, and return (postings_table, stats_table).
+    The stats table holds ADDITIVE (n_docs, sum_dl) rows — one per
+    ingest — so appends never rewrite it and readers reduce it to
+    (N, avgdl) with a sum over a handful of rows. Layout and lifecycle:
+    operators/maintenance.py.
     Idempotent: existing tables are reused unless ``overwrite``; appends
-    go through ``append_posting_index`` (same bucket spec)."""
+    go through ``append_posting_index``."""
     post_t = f"postings_{name}"
     stats_t = f"lexstats_{name}"
     have = spark.catalog.tableExists(post_t) and spark.catalog.tableExists(
@@ -270,39 +296,7 @@ def write_posting_index(
     if have and not overwrite:
         return post_t, stats_t
     posted = posting_table(df, text_col, id_col).transform(_materialize)
-
-    def _write_postings() -> None:
-        (
-            posted.repartition(n_buckets, "token")
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "token")
-            .sortBy("token")
-            .option("path", f"{path_root}/{name}/postings")
-            .saveAsTable(post_t)
-        )
-
-    def _write_stats() -> None:
-        (
-            posted.groupBy("doc")
-            .agg(F.max("dl").alias("dl"))
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-            )
-            .write.mode("overwrite")
-            .option("path", f"{path_root}/{name}/stats")
-            .saveAsTable(stats_t)
-        )
-
-    # both writes read the one materialized posting frame and target
-    # disjoint tables — overlap them (optimization guide §2.6)
-    from sdc_spark.operators.maintenance import run_concurrently
-
-    try:
-        run_concurrently(_write_postings, _write_stats)
-    finally:
-        # release the materialized corpus posting blocks even on write
-        # failure — leaked, they pin a corpus-sized frame for the session
-        _unmaterialize(posted)
+    _save_postings(posted, name, path_root, "overwrite")
     return post_t, stats_t
 
 
@@ -312,117 +306,51 @@ def append_posting_index(
     text_col: str,
     id_col: str,
     name: str,
-    n_buckets: int = _POSTING_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_postidx",
+    path_root: str = _m._DEFAULT_ROOTS["posting"],
 ) -> None:
     """Append one ingested batch (NEW doc ids — the same contract as the
     LSH/IVF/substring appends) to a persisted posting index: postings
-    append under the original bucket spec (~one file per bucket); the
-    stats table gains one additive (n_docs, sum_dl) row. Serialized
-    against concurrent compaction via the index maintenance lock
-    (operators/maintenance.py) — an append landing inside compaction's
-    stage-then-replace window would otherwise be lost."""
-    from sdc_spark.operators.maintenance import index_lock
-
-    from sdc_spark.operators.maintenance import run_concurrently
-
+    append under the original bucket spec; the stats table gains one
+    additive (n_docs, sum_dl) row. The batch is tokenized before the
+    index maintenance lock is taken."""
+    guard = _m.maintaining("posting", f"{path_root}/{name}")
     posted = posting_table(batch, text_col, id_col).transform(_materialize)
-    with index_lock(f"{path_root}/{name}"):
-
-        def _append_postings() -> None:
-            (
-                posted.repartition(n_buckets, "token")
-                .write.mode("append")
-                .bucketBy(n_buckets, "token")
-                .sortBy("token")
-                .saveAsTable(f"postings_{name}")
-            )
-
-        def _append_stats() -> None:
-            (
-                posted.groupBy("doc")
-                .agg(F.max("dl").alias("dl"))
-                .agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum("dl").alias("sum_dl"),
-                )
-                .write.mode("append")
-                .saveAsTable(f"lexstats_{name}")
-            )
-
-        # disjoint tables fed by the one materialized frame (§2.6)
-        try:
-            run_concurrently(_append_postings, _append_stats)
-        finally:
-            _unmaterialize(posted)
-
-
-def _rewrite_posting_table(
-    spark, name: str, df: DataFrame, path_root: str, n_buckets: int
-) -> None:
-    """Same atomic-enough rewrite as the LSH/IVF maintenance path: stage
-    the new content with lineage truncation BEFORE dropping the old
-    files, keep the bucket spec so consumer plans don't change. Content
-    must be read from the RAW parquet path (Catalyst partially elides an
-    equal-key repartition on top of a bucketed scan — the dedup-index
-    compaction test found this)."""
-    import shutil
-
-    from sdc_spark.materialize import materialize
-
-    table = f"postings_{name}"
-    path = f"{path_root}/{name}/postings"
-    staged = materialize(df.repartition(n_buckets, "token"), truncate=True)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    shutil.rmtree(path, ignore_errors=True)
-    (
-        staged.write.mode("overwrite")
-        .bucketBy(n_buckets, "token")
-        .sortBy("token")
-        .option("path", path)
-        .saveAsTable(table)
-    )
+    with guard:
+        _save_postings(posted, name, path_root, "append")
 
 
 def compact_posting_index(
-    spark,
-    name: str,
-    n_buckets: int = _POSTING_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_postidx",
+    spark, name: str, path_root: str = _m._DEFAULT_ROOTS["posting"]
 ) -> None:
     """Compact back to ~one file per bucket after append-driven file
     growth (appends are new-doc-only, so rows are already unique — this
     is pure file coalescing; contents bit-identical when no takedowns
     are pending, pinned by test) AND apply any pending tombstones
-    physically (the LSM contract: deletes are logged O(|batch|) at
-    takedown time, amortized into this scheduled rewrite). After a
-    tombstone-applying compaction the stats table is re-based to one
-    exact row recomputed from the surviving postings. Holds the index
-    maintenance lock for the whole stage-then-replace window."""
-    from sdc_spark.operators.maintenance import index_lock
-
-    with index_lock(f"{path_root}/{name}"):
-        content = spark.read.parquet(f"{path_root}/{name}/postings")
+    physically. After a tombstone-applying compaction the stats table is
+    re-based to one exact row recomputed from the surviving postings."""
+    with _m.maintaining("posting", f"{path_root}/{name}") as root:
+        content = spark.read.parquet(f"{root}/postings")
         tomb = posting_tombstones(spark, name)
         if tomb is not None:
             content = content.join(tomb, "doc", "left_anti")
-        _rewrite_posting_table(spark, name, content, path_root, n_buckets)
+        _m.replace_table(
+            spark, content, f"postings_{name}", f"{root}/postings", ("token",)
+        )
         if tomb is not None:
-            _rebuild_posting_stats(spark, name, path_root)
-            import shutil
-
-            spark.sql(f"DROP TABLE IF EXISTS lexdel_{name}")
-            shutil.rmtree(f"{path_root}/{name}/tombstones", ignore_errors=True)
+            _m.replace_table(
+                spark,
+                _stats_row(spark.table(f"postings_{name}")),
+                f"lexstats_{name}",
+                f"{root}/stats",
+            )
+            _m.clear_logs(spark, "posting", path_root, name)
 
 
 def posting_tombstones(spark, name: str) -> DataFrame | None:
     """The index's delete log: a (doc) frame of tombstoned ids, or None
     when no takedown has happened since the last compaction. Serve paths
     anti-join it; ``compact_posting_index`` applies it physically."""
-    t = f"lexdel_{name}"
-    if not spark.catalog.tableExists(t):
-        return None
-    return spark.table(t)
+    return _m.read_log(spark, f"lexdel_{name}")
 
 
 def delete_from_posting_index(
@@ -430,102 +358,42 @@ def delete_from_posting_index(
     doc_ids: DataFrame,
     name: str,
     id_col: str = "doc_id",
-    n_buckets: int = _POSTING_BUCKETS,
-    path_root: str = "/tmp/sdc_spark_postidx",
-    deferred: bool = True,
+    path_root: str = _m._DEFAULT_ROOTS["posting"],
 ) -> None:
     """Takedown/expiry: remove documents from the persisted index.
 
-    Default is the LSM answer — a TOMBSTONE log: the id batch appends to
-    a tiny ``lexdel_<name>`` side table (write cost O(|batch|), the
+    The LSM answer — a TOMBSTONE log: the not-yet-logged ids append to a
+    tiny ``lexdel_<name>`` side table (write cost O(|batch|), the
     multi-TB posting table is not touched) and the stats table gains one
     NEGATIVE additive row (-n_docs, -sum_dl) for the removed docs, so
     the reader's existing sum-of-rows reduction yields post-takedown
     (N, avgdl) with no rebuild. ``bm25_from_index`` anti-joins the log
     at serve time; physical deletion is deferred to
     ``compact_posting_index``. A weekly takedown batch on a 100-TB index
-    therefore writes kilobytes, not the index.
-
-    ``deferred=False`` keeps the eager path (anti-join + full rewrite +
-    stats rebuild) for callers that need the files gone NOW (e.g. a
-    storage-level compliance wipe). Neither path hints the anti-join
-    join strategy: a bulk expiry's id set can be corpus-scale, and a
-    forced broadcast of it would OOM the driver — AQE picks."""
-    from sdc_spark.materialize import materialize
-    from sdc_spark.operators.maintenance import index_lock
-
+    therefore writes kilobytes, not the index."""
     ids = doc_ids.select(F.col(id_col).alias("doc")).distinct()
-    with index_lock(f"{path_root}/{name}"):
-        if deferred:
-            prior = posting_tombstones(spark, name)
-            if prior is not None:
-                # already-tombstoned ids must not subtract stats twice
-                ids = ids.join(prior, "doc", "left_anti")
-            fresh = materialize(ids, truncate=True)
-            neg = (
-                spark.table(f"postings_{name}")
-                .join(fresh, "doc", "left_semi")
-                .groupBy("doc")
-                .agg(F.max("dl").alias("dl"))
-                .agg(
-                    (-F.count(F.lit(1))).alias("n_docs"),
-                    (-F.coalesce(F.sum("dl"), F.lit(0))).alias("sum_dl"),
-                )
+    with _m.maintaining("posting", f"{path_root}/{name}") as root:
+        # already-tombstoned ids must not subtract stats twice
+        fresh = _m.unlogged(spark, ids, f"lexdel_{name}")
+        neg = (
+            spark.table(f"postings_{name}")
+            .join(fresh, "doc", "left_semi")
+            .groupBy("doc")
+            .agg(F.max("dl").alias("dl"))
+            .agg(
+                (-F.count(F.lit(1))).alias("n_docs"),
+                (-F.coalesce(F.sum("dl"), F.lit(0))).alias("sum_dl"),
             )
-            neg.write.mode("append").saveAsTable(f"lexstats_{name}")
-            t = f"lexdel_{name}"
-            if spark.catalog.tableExists(t):
-                fresh.write.mode("append").saveAsTable(t)
-            else:
-                (
-                    fresh.write.mode("overwrite")
-                    .option("path", f"{path_root}/{name}/tombstones")
-                    .saveAsTable(t)
-                )
-            return
-        remaining = (
-            spark.read.parquet(f"{path_root}/{name}/postings")
-            .join(ids, "doc", "left_anti")
         )
-        staged = materialize(remaining, truncate=True)
-        _rewrite_posting_table(spark, name, staged, path_root, n_buckets)
-        _rebuild_posting_stats(spark, name, path_root)
-
-
-def _rebuild_posting_stats(spark, name: str, path_root: str) -> None:
-    """Overwrite the stats table with one exact row recomputed from the
-    current (physically surviving) postings — the compaction-time reset
-    that re-bases the additive row stream."""
-    from sdc_spark.materialize import materialize
-
-    stats_t = f"lexstats_{name}"
-    new_stats = (
-        spark.table(f"postings_{name}")
-        .groupBy("doc")
-        .agg(F.max("dl").alias("dl"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
-    )
-    staged_stats = materialize(new_stats, truncate=True)
-    spark.sql(f"DROP TABLE IF EXISTS {stats_t}")
-    import shutil
-
-    shutil.rmtree(f"{path_root}/{name}/stats", ignore_errors=True)
-    (
-        staged_stats.write.mode("overwrite")
-        .option("path", f"{path_root}/{name}/stats")
-        .saveAsTable(stats_t)
-    )
+        _m.save_table(neg, f"lexstats_{name}", mode="append")
+        _m.append_log(spark, fresh, f"lexdel_{name}", f"{root}/tombstones")
 
 
 def drop_posting_index(
-    spark, name: str, path_root: str = "/tmp/sdc_spark_postidx"
+    spark, name: str, path_root: str = _m._DEFAULT_ROOTS["posting"]
 ) -> None:
     """Drop the posting index tables and files (test/rebuild lifecycle)."""
-    import shutil
-
-    for t in (f"postings_{name}", f"lexstats_{name}", f"lexdel_{name}"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    shutil.rmtree(f"{path_root}/{name}", ignore_errors=True)
+    _m.drop_index(spark, "posting", path_root, name)
 
 
 def bm25_from_index(

@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sdc_spark.materialize import materialize as _materialize
+from sdc_spark.operators import maintenance as _m
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -408,7 +409,7 @@ def write_ivf_index(
     vec_col: str = "embedding",
     name: str = "default",
     n_cells: int = 16,
-    path_root: str = "/tmp/sdc_spark_ivfidx",
+    path_root: str = _m._DEFAULT_ROOTS["ivf"],
     overwrite: bool = False,
 ) -> tuple[str, str]:
     """Persist the IVF index — the ANN twin of the bucketed LSH dedup
@@ -420,7 +421,8 @@ def write_ivf_index(
     100-TB corpus each search then scans ~nprobe/n_cells of the data
     instead of re-clustering per batch. Returns
     (centroids_path, cells_path) for ``ann_ivf_search_index``.
-    Idempotent per name unless ``overwrite``."""
+    Idempotent per name unless ``overwrite``. Lifecycle (appends,
+    tombstone log, compaction, lock): operators/maintenance.py."""
     import os
 
     cent_p = f"{path_root}/{name}/centroids"
@@ -455,9 +457,7 @@ def write_ivf_index(
             .parquet(cells_p)
         )
 
-    from sdc_spark.operators.maintenance import run_concurrently
-
-    run_concurrently(_write_centroids, _write_cells)
+    _m.run_concurrently(_write_centroids, _write_cells)
     return cent_p, cells_p
 
 
@@ -531,16 +531,14 @@ def append_ivf_index(
     batch is assigned against the EXISTING codebook (no re-clustering —
     cell semantics stay stable for every already-written vector, the
     property incremental search correctness rests on) and appended into
-    its cell directories, one file per touched cell. Codebook drift
-    under a shifted embedding distribution is the operator's documented
-    trade: rebuild with write_ivf_index(overwrite=True) on a schedule,
-    exactly like periodic LSH-index compaction. Serialized against
-    concurrent compaction via the index maintenance lock."""
+    its cell directories, one file per touched cell, under the index
+    maintenance lock. Codebook drift under a shifted embedding
+    distribution is the operator's documented trade: rebuild with
+    write_ivf_index(overwrite=True) on a schedule, exactly like periodic
+    LSH-index compaction."""
     import os
 
-    from sdc_spark.operators.maintenance import index_lock
-
-    with index_lock(os.path.dirname(cells_path.rstrip("/"))):
+    with _m.maintaining("ivf", os.path.dirname(cells_path.rstrip("/"))):
         centroids = spark.read.parquet(cent_path)
         n_cells = centroids.count()
         v = new_vectors.select(
@@ -557,84 +555,49 @@ def append_ivf_index(
         )
 
 
-def _rewrite_ivf_cells(spark, cells_path: str, content: DataFrame, n_cells: int) -> None:
-    """Stage-then-overwrite for IVF cell maintenance: content is eagerly
-    materialized with lineage truncation BEFORE the old files are
-    replaced (lineage-kept persist would recompute lost blocks from the
-    deleted files)."""
-    from sdc_spark.materialize import materialize
-
-    staged = materialize(content.repartition(n_cells, "cell"), truncate=True)
-    (
-        staged.write.mode("overwrite").partitionBy("cell").parquet(cells_path)
-    )
-
-
 def compact_ivf_index(
-    spark, name: str, path_root: str = "/tmp/sdc_spark_ivfidx"
+    spark, name: str, path_root: str = _m._DEFAULT_ROOTS["ivf"]
 ) -> None:
     """Compact a persisted IVF index back to ~one file per cell (every
-    append adds a file per touched cell — the same LSM-ish decay the LSH
-    index compaction answers). Pending tombstones are applied physically
-    here and the log cleared; with none pending, contents are
-    bit-identical before/after. Holds the index maintenance lock across
-    the stage-then-replace window."""
-    import shutil
-
-    from sdc_spark.operators.maintenance import index_lock
-
-    cent_p = f"{path_root}/{name}/centroids"
-    cells_p = f"{path_root}/{name}/cells"
-    with index_lock(f"{path_root}/{name}"):
-        n_cells = spark.read.parquet(cent_p).count()
+    append adds a file per touched cell). Pending tombstones are applied
+    physically here and the log cleared; with none pending, contents are
+    bit-identical before/after. The cells stay partitioned by cell, so
+    the stage-then-replace overwrites the path instead of a table."""
+    with _m.maintaining("ivf", f"{path_root}/{name}") as root:
+        cells_p = f"{root}/cells"
+        n_cells = int(spark.read.parquet(f"{root}/centroids").count())
         content = spark.read.parquet(cells_p)
         tomb = ivf_tombstones(spark, cells_p)
         if tomb is not None:
             content = content.join(tomb, "nid", "left_anti")
-        _rewrite_ivf_cells(spark, cells_p, content, int(n_cells))
+        staged = _materialize(content.repartition(n_cells, "cell"), truncate=True)
+        staged.write.mode("overwrite").partitionBy("cell").parquet(cells_p)
         if tomb is not None:
-            shutil.rmtree(_ivf_tomb_path(cells_p), ignore_errors=True)
+            _m.clear_logs(spark, "ivf", path_root, name)
 
 
 def delete_from_ivf_index(
     spark,
     ids: DataFrame,
     name: str,
-    path_root: str = "/tmp/sdc_spark_ivfidx",
-    deferred: bool = True,
+    path_root: str = _m._DEFAULT_ROOTS["ivf"],
 ) -> None:
-    """Remove vectors from a persisted IVF index (takedown/expiry).
-
-    Default is a TOMBSTONE log beside the cell directories: the id batch
-    appends O(|batch|) bytes and the multi-TB cell files are untouched;
+    """Remove vectors from a persisted IVF index (takedown/expiry) by
+    appending their ids to a TOMBSTONE log beside the cell directories:
+    O(|batch|) bytes, the multi-TB cell files are untouched.
     ``ann_ivf_search_index`` anti-joins the log at serve time (over the
     already-cell-pruned scan), so searches stop returning the ids
-    immediately. Physical deletion is amortized into
-    ``compact_ivf_index``. ``deferred=False`` keeps the eager full
-    cell rewrite for storage-level wipes. No join-strategy hints —
-    AQE picks (bulk-expiry id sets can be corpus-scale)."""
-    from sdc_spark.operators.maintenance import index_lock
-
-    cent_p = f"{path_root}/{name}/centroids"
-    cells_p = f"{path_root}/{name}/cells"
+    immediately; ``compact_ivf_index`` deletes them physically."""
     idf = ids.select(F.col(ids.columns[0]).alias("nid")).distinct()
-    with index_lock(f"{path_root}/{name}"):
-        if deferred:
-            # re-logging an already-tombstoned id is harmless (anti-join
-            # is idempotent) — no read of the existing log needed
-            idf.write.mode("append").parquet(_ivf_tomb_path(cells_p))
-            return
-        n_cells = spark.read.parquet(cent_p).count()
-        _rewrite_ivf_cells(
-            spark,
-            cells_p,
-            spark.read.parquet(cells_p).join(idf, "nid", "left_anti"),
-            int(n_cells),
-        )
+    with _m.maintaining("ivf", f"{path_root}/{name}") as root:
+        # re-logging an already-tombstoned id is harmless (anti-join
+        # is idempotent) — no read of the existing log needed
+        idf.write.mode("append").parquet(_ivf_tomb_path(f"{root}/cells"))
 
 
-def drop_ivf_index(name: str, path_root: str = "/tmp/sdc_spark_ivfidx") -> None:
-    """Remove a persisted IVF index's files (fresh-rebuild path)."""
+def drop_ivf_index(name: str, path_root: str = _m._DEFAULT_ROOTS["ivf"]) -> None:
+    """Remove a persisted IVF index's files (fresh-rebuild path). IVF
+    registers no catalog table, so this needs no session."""
     import shutil
 
     shutil.rmtree(f"{path_root}/{name}", ignore_errors=True)

@@ -1705,10 +1705,6 @@ def dedup_index_ingest_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     unmaterialize(base1)  # out1 is truncated; nothing reads base1 again
-    # refreshed metadata: the append added files the cached relation
-    # doesn't know about
-    spark.catalog.refreshTable(bands_t)
-    spark.catalog.refreshTable(grams_t)
     base2 = base2_box[0]
     out2 = screen(batch2, 2, base2)
     unmaterialize(base2)
@@ -2011,9 +2007,8 @@ oracle(
 def dedup_index_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted-LSH takedown graded end-to-end, BOTH phases of the
     tombstone lifecycle: build the corpus index (doc_id%5!=0), tombstone-
-    delete every corpus doc with doc_id%3==0 (delete_from_lsh_index
-    deferred default — an O(|batch|) delete-log write, the band/gram
-    files untouched), then screen the batch (doc_id%5==0) passing the
+    delete every corpus doc with doc_id%3==0 (delete_from_lsh_index:
+    an O(|batch|) delete-log write, the band/gram files untouched), then screen the batch (doc_id%5==0) passing the
     log (snapshot 1: serve-time exclusion via the candidate anti-join);
     compact (physical apply + log clear) and screen again (snapshot 2:
     post-compaction index). Both snapshots must hash-match exact
@@ -2074,8 +2069,6 @@ def dedup_index_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out1 = screen(1, sdedup.lsh_tombstones(spark, name))
     sdedup.compact_lsh_index(spark, name)
-    spark.catalog.refreshTable(bands_t)
-    spark.catalog.refreshTable(grams_t)
     out2 = screen(2, sdedup.lsh_tombstones(spark, name))
     unmaterialize(base)  # both snapshots truncated; base is dead
     return out1.unionByName(out2)

@@ -418,7 +418,6 @@ def substring_index_ingest_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     unmaterialize(kpos1)  # out1 is truncated; nothing reads kpos1 again
-    spark.catalog.refreshTable(f"sub_grams_{name}")
     kpos2 = kpos2_box[0]
     out2 = screen(batch2, 2, kpos2)
     unmaterialize(kpos2)

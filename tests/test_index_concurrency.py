@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import sdc_spark.operators.retrieval as sret
-from sdc_spark.operators.maintenance import index_lock
+from sdc_spark.operators.maintenance import INDEX_BUCKETS, index_lock
 
 NAME = "pytest_racelex"
 
@@ -152,7 +152,7 @@ def test_compaction_policy_from_file_stats(spark, docs):
                 spark, docs.filter(F.col("doc_id") % 6 == i), "text", "doc_id", name
             )
         st = index_file_stats(idx_root)
-        assert st["data"]["postings"]["files"] > 2 * sret._POSTING_BUCKETS
+        assert st["data"]["postings"]["files"] > 2 * INDEX_BUCKETS
         assert needs_compaction(idx_root, max_files_per_bucket=2.0)
 
         sret.compact_posting_index(spark, name)

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import sdc_spark.operators.retrieval as sret
+from sdc_spark.operators.maintenance import INDEX_BUCKETS
 
 NAME = "pytest_lexidx"
 ROOT = "/tmp/sdc_spark_postidx"
@@ -57,7 +58,7 @@ def test_index_serves_bm25_through_append(spark, docs):
         assert st["rows"] == 2 and st["n"] == docs.count()
         # append laid down ~one file per bucket, not a blizzard
         files = glob.glob(f"{ROOT}/{NAME}/postings/*.parquet")
-        assert 0 < len(files) <= 2 * sret._POSTING_BUCKETS, len(files)
+        assert 0 < len(files) <= 2 * INDEX_BUCKETS, len(files)
         # idempotent reuse: a second write call must NOT rebuild
         t1, t2 = sret.write_posting_index(spark, base, "text", "doc_id", NAME)
         assert (t1, t2) == (f"postings_{NAME}", f"lexstats_{NAME}")
@@ -80,7 +81,7 @@ def test_compact_and_delete_posting_index(spark, docs):
         sret.compact_posting_index(spark, NAME)
         assert _served(spark, q) == before  # bit-identical service
         files = glob.glob(f"{ROOT}/{NAME}/postings/*.parquet")
-        assert 0 < len(files) <= sret._POSTING_BUCKETS, len(files)
+        assert 0 < len(files) <= INDEX_BUCKETS, len(files)
         # takedown (deferred/tombstone default): served == in-session
         # BM25 on the surviving corpus, INCLUDING the shifted (N, avgdl)
         # normalization from the negative additive stats row
@@ -127,10 +128,12 @@ def test_compact_and_delete_posting_index(spark, docs):
 
 
 def test_eager_delete_has_no_forced_broadcast(spark, docs):
-    """The eager (deferred=False) takedown anti-join leaves join strategy
-    to AQE: a bulk expiry's id set can be corpus-scale, and a forced
-    broadcast of it is a driver OOM. Pin the plan shape: no broadcast
-    hint reaches the anti-join."""
+    """Takedowns leave join strategy to AQE: a bulk expiry's id set can
+    be corpus-scale, and a forced broadcast of it is a driver OOM. Pin
+    the plan shape of the anti-join compaction applies (raw postings
+    against the id log): no broadcast hint reaches it. The delete itself
+    only logs ids; its serve-side anti-join and the shared log and
+    replace helpers are pinned at source level."""
     base = docs.filter(F.col("doc_id") % 5 != 0)
     sret.drop_posting_index(spark, NAME)
     try:
@@ -143,15 +146,19 @@ def test_eager_delete_has_no_forced_broadcast(spark, docs):
         )
         logical = remaining._jdf.queryExecution().logical().toString()
         assert "UnresolvedHint" not in logical and "ResolvedHint" not in logical
-        # and the deferred path's serve-side anti-join is hint-free too
+        # and the tombstone path's serve-side anti-join is hint-free too
         sret.delete_from_posting_index(spark, ids, NAME, id_col="doc")
         q = spark.createDataFrame([(0, "vector")], "qid int, term string")
         served = {r["doc"] for r in sret.bm25_from_index(spark, NAME, q).collect()}
         assert served  # tombstoned serve still works end-to-end
         # source-level guard (the serve anti-join lives behind the
         # materialize boundary, so plan strings can't see it): no
-        # F.broadcast() is ever applied to a tombstone frame
+        # F.broadcast() is ever applied to a tombstone frame — neither in
+        # the posting module nor in the shared lifecycle helpers that
+        # read, extend and apply the logs
         import inspect
+
+        from sdc_spark.operators import maintenance as maint
 
         src = inspect.getsource(sret)
         for fn in ("delete_from_posting_index", "compact_posting_index"):
@@ -160,5 +167,14 @@ def test_eager_delete_has_no_forced_broadcast(spark, docs):
         serve_body = src.split("def bm25_from_index(")[1].split("\ndef ")[0]
         tomb_seg = serve_body.split("posting_tombstones")[1].split("_materialize")[0]
         assert "F.broadcast" not in tomb_seg
+        for helper in (
+            maint.read_log,
+            maint.unlogged,
+            maint.append_log,
+            maint.save_table,
+            maint.replace_table,
+            maint.clear_logs,
+        ):
+            assert "broadcast" not in inspect.getsource(helper), helper.__name__
     finally:
         sret.drop_posting_index(spark, NAME)

@@ -163,7 +163,9 @@ def _posting_lifecycle(spark, path_root: str) -> None:
     sret.write_posting_index(spark, base, "text", "doc_id", name, path_root=path_root)
     assert served() == insession(base), "serve after write"
 
-    sret.append_posting_index(spark, batch, "text", "doc_id", name)
+    sret.append_posting_index(
+        spark, batch, "text", "doc_id", name, path_root=path_root
+    )
     assert served() == insession(docs), "serve after append"
 
     gone = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
