@@ -30,24 +30,19 @@ from sdc_spark.materialize import materialize_lazy as _materialize_lazy
 from sdc_spark.materialize import unmaterialize as _unmaterialize
 from sdc_spark.operators import maintenance as _m
 from sdc_spark.operators.scan import spread_scan
-
-
-def _materialize_iter(df):
-    """Per-round materialization for the iterative loops below: lineage
-    MUST be truncated every round (round N's plan embeds round N-1's, so
-    kept lineage doubles Catalyst's analysis cost per iteration — under
-    persist mode this escalates to checkpoint/localCheckpoint; see
-    sdc_spark.materialize)."""
-    return _materialize(df, truncate=True)
+from sdc_spark.sources.readers import local_rows
 
 
 def _materialize_iter_lazy(df):
-    """Lazy twin of ``_materialize_iter`` for loops whose convergence
-    aggregate immediately follows the round materialization: the
-    aggregate IS the materializing action, fusing two jobs (checkpoint
-    then agg-over-blocks) into one per round (guide §1.2 — the loops are
-    driver-fixed-cost bound at bench scale: profiled ~120 ms of job gap
-    per job on dedup_components_star)."""
+    """Per-round pin for the iterative connected-components loop. Lineage
+    MUST be truncated every round (round N's plan embeds round N-1's, so
+    kept lineage doubles Catalyst's analysis cost per iteration — under
+    persist mode this escalates to checkpoint/localCheckpoint; see
+    sdc_spark.materialize). Lazy, because the round's fingerprint
+    aggregate immediately follows: the aggregate IS the materializing
+    action, fusing two jobs (checkpoint then agg-over-blocks) into one per
+    round (guide §1.2 — the loop is driver-fixed-cost bound at bench
+    scale: profiled ~120 ms of job gap per job on dedup_components_star)."""
     return _materialize_lazy(df, truncate=True)
 
 
@@ -611,190 +606,110 @@ def embedding_near_dups(
     )
 
 
-def dedup_components(
-    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b", max_iter: int = 25
-) -> DataFrame:
-    """Connected components over duplicate pairs — the grouping step that
-    turns pairwise near-dup hits into dedup clusters (keep min-id per
-    component, drop the rest).
+# Edge count at or below which connected components finish on the driver:
+# collecting that many (u, v) rows and running union-find over them costs
+# no more than one large-star/small-star alternation over the same edges
+# (measured with tools/chain_probe.py). Driver memory for the finish is
+# bounded by construction: at most LOCAL_FINISH_EDGES + 1 rows are read.
+# 0 disables the finish (rounds only).
+LOCAL_FINISH_EDGES = 10_000
 
-    Pregel-lite min-label propagation: every node starts labeled with its
-    own id; each round takes the min of its label and its neighbors',
-    until a fixpoint (driver-side convergence check — the loop count is
-    the cluster diameter, tiny for dup clusters). Deterministic:
-    component id = min doc id in the component.
 
-    Round mechanics (r11 restructure — same fixpoint, half the per-round
-    fixed cost): the edge set carries a SELF-LOOP per node, so one round
-    is a single join + min-aggregate referencing the label frame ONCE
-    (min over self ∪ neighbors == least(own, min(neighbors))); TWO
-    rounds are fused per ``localCheckpoint`` + convergence check, since
-    the unmaterialized 2-round chain is still linear (each subplan
-    consumed once — no duplicated work), while checkpoints and
-    convergence jobs are pure driver-side fixed cost at scale.
-    Convergence: labels are per-node monotone non-increasing, so the
-    label SUM (exact decimal) is strictly decreasing until fixpoint —
-    equal consecutive sums == no node changed. An extra no-op round
-    inside the last fused block is a no-op by idempotence. Because
-    sum-equality observes the fixpoint one fused block late, ``max_iter``
-    should exceed the expected component diameter by ~2; a final
-    uncounted single-round probe rescues the boundary case before the
-    loud failure. Ids must be INTEGRAL (checked) — the exact-sum check
-    is not injective for strings/floats."""
-    # one reference to `pairs` (it usually arrives UN-materialized — e.g.
-    # minhash's verify subtree — so N references would replay it N times):
-    # each input pair explodes into both edge directions plus both
-    # endpoints' self-loops, then one distinct. The self-loops make a
-    # propagation round's min over the in-neighborhood include the node's
-    # own label, removing the second reference to the label frame.
-    edges_self = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
-                    F.struct(F.col(b_col).alias("u"), F.col(a_col).alias("v")),
-                    F.struct(F.col(a_col).alias("u"), F.col(a_col).alias("v")),
-                    F.struct(F.col(b_col).alias("u"), F.col(b_col).alias("v")),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-        .transform(_materialize)
-    )
-    # every node carries a self-loop, so the u side of the checkpointed
-    # edge set IS the node set
-    labels = edges_self.select("u").distinct().select("u", F.col("u").alias("lbl"))
-    # The sum-equality convergence check below is only sound for INTEGRAL
-    # ids: a string id either throws under ANSI (CAST_INVALID_INPUT) or
-    # casts to all-null with ANSI off — the None sum would declare
-    # convergence after one fused block and return silently WRONG
-    # components; zero-padded numeric strings ('007' vs '7') alias under
-    # the non-injective cast; float ids truncate. Fail loudly instead
-    # (the operator's existing diameter-failure contract) — callers with
-    # non-integral ids should hash/recode them to longs first.
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+def _min_labels(edges) -> list[tuple]:
+    """Union-find over (u, v) rows: every endpoint with the minimum id of
+    its component. Roots are always the smaller id, so a root IS the
+    component minimum."""
+    parent: dict = {}
 
-    lbl_type = labels.schema["lbl"].dataType
-    if not isinstance(lbl_type, (ByteType, ShortType, IntegerType, LongType)):
-        raise TypeError(
-            "dedup_components: id/label column must be an integral type "
-            f"(got {lbl_type.simpleString()}) — the exact label-sum "
-            "convergence check is not injective for non-integral ids; "
-            "recode ids to longs (e.g. xxhash64) before calling."
-        )
-    prev_snap = None
-    prev_sum = None
-    converged = False
-    rounds = 0
-    while rounds < max_iter:
-        cur = labels
-        for _ in range(2):  # two propagation rounds per checkpoint
-            cur = (
-                edges_self.join(
-                    cur.select(F.col("u").alias("v"), F.col("lbl").alias("vlbl")),
-                    "v",
-                )
-                .groupBy("u")
-                .agg(F.min("vlbl").alias("lbl"))
-            )
-            rounds += 1
-            if rounds >= max_iter:
-                break
-        # lazy + agg = ONE job per fused block: the sum is the action
-        # that computes and pins the round's labels (checkpoint-then-agg
-        # was two jobs plus an inter-job driver gap)
-        snap = cur.transform(_materialize_iter_lazy)
-        s = snap.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
-        labels = snap
-        # persist-mode hygiene: the superseded round's blocks are never
-        # read again — release them so unbounded iteration can't
-        # accumulate cached state (no-op under the checkpoint modes)
-        if prev_snap is not None:
-            _unmaterialize(prev_snap)
-        prev_snap = snap
-        # s is None only for an EMPTY label set (sum over zero rows) —
-        # trivially a fixpoint; otherwise equal consecutive exact sums
-        # == no node changed (monotone non-increasing labels)
-        if s is None or (prev_sum is not None and s == prev_sum):
-            converged = True
-            break
-        prev_sum = s
-    if not converged:
-        # Sum-equality observes the fixpoint one block LATE (a block must
-        # change nothing for the sums to match), so a diameter within ~2
-        # of max_iter would raise spuriously even though the labels are
-        # already correct. One extra single-round probe (not counted
-        # against max_iter) distinguishes "at the fixpoint, just not yet
-        # observed" from a genuinely under-iterated component.
-        probe = (
-            edges_self.join(
-                labels.select(F.col("u").alias("v"), F.col("lbl").alias("vlbl")),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("vlbl").alias("lbl"))
-            .agg(F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"))
-            .first()["s"]
-        )
-        converged = probe is None or probe == prev_sum
-    if not converged:
-        # propagation moves a label ONE hop per round, so a component whose
-        # diameter exceeds max_iter would silently mislabel its far nodes —
-        # fail loudly and point at the diameter-independent alternative
-        raise RuntimeError(
-            f"dedup_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or use "
-            "components_star, which converges in O(log n) rounds."
-        )
-    return labels.select(F.col("u").alias("doc"), F.col("lbl").alias("component"))
+    def find(x):
+        parent.setdefault(x, x)
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return [(n, find(n)) for n in parent]
 
 
 def components_star(
     pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b", max_iter: int = 25
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm). Same contract as ``dedup_components``:
-    output (doc, component) with component = min node id, deterministic.
+    """Connected components over duplicate pairs — the grouping step that
+    turns pairwise near-dup hits into dedup clusters. Output (doc,
+    component) with component = min node id, deterministic; every node
+    of ``pairs`` appears, a self-pair (a == b) keeps an isolated node.
 
-    Why a second implementation: min-label propagation runs for
-    *diameter* rounds — fine for near-clique dup clusters, but a 100-TB
-    corpus also produces chain-shaped components (temporally drifting
-    near-dup chains, redirect chains), where diameter is unbounded.
-    Large-star/small-star halves tree heights every alternation and
-    converges in O(log n) rounds regardless of diameter: large-star
-    re-hangs every strictly-larger neighbor of each center onto the
-    neighborhood minimum; small-star then flattens each center's smaller
-    neighbors onto that minimum. Each half-round computes the per-center
-    neighborhood minimum as a WINDOW over the center key (r12 — the
-    groupBy+join form referenced the half-round frame twice, forcing an
-    extra materialization per alternation; the window form is one linear
-    pipeline, so a full alternation runs scan→window→distinct→window→
-    distinct with ONE materialization and no joins) + distinct; edge
-    multiplicity never exceeds the input edge count, so per-round cost is
-    bounded by the (shrinking) edge set, not by node degree skew.
-    Fixpoint = the star graph rooted at each component minimum, detected
-    by a (count, hash-sum) checksum — one scalar agg per round."""
+    Small graphs finish on the driver: once the operator knows the edge
+    set has at most ``LOCAL_FINISH_EDGES`` edges, it collects them, runs
+    union-find, and returns the labels as a one-slice local frame. The
+    check runs at two points, and only the observed edge count decides:
+
+    - before any round, as a read of at most bound + 1 rows of the
+      deduplicated pair set — that read is also the set's materializing
+      action. Rows that fit are the whole graph (self-pairs included),
+      so the labels are the complete result and no round runs;
+    - inside the rounds, on the edge count each round's fingerprint
+      already returns: the round's edge set is collected and its labels
+      joined to the node set, as the terminal step does.
+
+    Larger graphs run alternating large-star / small-star (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC'14 — public
+    algorithm), O(log n) rounds regardless of component diameter (chain-
+    shaped components, e.g. drifting near-dup or redirect chains, have
+    unbounded diameter). Large-star re-hangs every strictly-larger
+    neighbor of each center onto the neighborhood minimum; small-star
+    then flattens each center's smaller neighbors onto that minimum.
+    Each half-round computes the per-center neighborhood minimum as a
+    WINDOW over the center key (one linear pipeline, ONE materialization
+    per alternation, no joins) + distinct; edge multiplicity never
+    exceeds the input edge count. Fixpoint = the star graph rooted at
+    each component minimum, detected by a (count, hash-sum) checksum —
+    one scalar agg per round. With the bound at 0 only the rounds run.
+
+    Ids must be INTEGRAL (checked): the rounds order ids in Spark and the
+    finish orders them in Python, and only for integers do the two
+    orders provably agree (floats differ on NaN)."""
     from pyspark.sql import Window as _W
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-    # ONE materialized pass over `pairs` serves both the edge set and the
-    # terminal node set (r12): `pairs` usually arrives UN-materialized
-    # (minhash's verify subtree), and the old terminal
-    # `pairs.select(a) ∪ pairs.select(b)` replayed that subtree twice
-    # more inside the final job. Self-pairs (a == b) are kept in `base`
+    # ONE materialized pass over `pairs` serves the edge set, the bounded
+    # read and the terminal node set: `pairs` usually arrives
+    # UN-materialized (minhash's verify subtree), and every further
+    # reference would replay it. Self-pairs (a == b) are kept in `base`
     # so isolated nodes survive into the node set; the loop filters them
     # out of the working edge set.
-    base = (
-        pairs.select(
-            F.greatest(F.col(a_col), F.col(b_col)).alias("u"),
-            F.least(F.col(a_col), F.col(b_col)).alias("v"),
+    base = pairs.select(
+        F.greatest(F.col(a_col), F.col(b_col)).alias("u"),
+        F.least(F.col(a_col), F.col(b_col)).alias("v"),
+    ).distinct()
+    id_type = base.schema["u"].dataType
+    t = id_type.simpleString()
+    if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
+        raise TypeError(
+            f"dedup_components: id column must be an integral type (got {t}) "
+            "— the driver-side finish and the distributed rounds must order "
+            "ids identically; recode ids to longs (e.g. xxhash64) before calling."
         )
-        .distinct()
-        .transform(_materialize)
-    )
+    spark = pairs.sparkSession
+    bound = LOCAL_FINISH_EDGES
+    if bound:
+        # the bounded read is the lazy pin's materializing action: one job
+        # instead of a checkpoint job followed by a collect job. The pin
+        # truncates lineage, so under every mode it is a checkpoint, never
+        # a cache entry that outlives the frame: the early return needs no
+        # release call.
+        base = _materialize_lazy(base, truncate=True)
+        head = base.limit(bound + 1).collect()
+        if len(head) <= bound:
+            return local_rows(spark, _min_labels(head), f"doc {t}, component {t}")
+    else:
+        base = base.transform(_materialize)
     edges = base.filter(F.col("u") != F.col("v"))
     wu = _W.partitionBy("u")
     prev = None
@@ -847,6 +762,13 @@ def components_star(
         # `base` — unmaterialize() no-ops on it; `base` itself stays
         # pinned for the terminal node set.
         _unmaterialize(old_edges)
+        if bound and row["c"] <= bound:
+            # the residual edge set fits: its union-find labels are final
+            old_edges = edges
+            edges = local_rows(spark, _min_labels(edges.collect()), f"u {t}, v {t}")
+            _unmaterialize(old_edges)
+            converged = True
+            break
         cur = (row["c"], row["h"])
         if cur == prev:
             converged = True
@@ -855,15 +777,15 @@ def components_star(
     if not converged:
         # a non-fixpoint edge set can still be multi-level (a node hung on
         # a non-minimum), i.e. labels would be WRONG, not merely stale —
-        # mirror dedup_components' loud failure instead of returning them
+        # fail loudly instead of returning them
         raise RuntimeError(
             f"components_star did not reach a fixpoint in {max_iter} "
             "alternations (expected O(log n)); raise max_iter — returning "
             "non-converged labels would mislabel components."
         )
     # node set from the MATERIALIZED base (self-pairs preserved isolated
-    # nodes), not from `pairs` — the old union replayed the whole pair
-    # subtree twice inside this final job
+    # nodes), not from `pairs` — a union over `pairs` would replay the
+    # whole pair subtree twice inside this final job
     nodes = (
         base.select(F.col("u").alias("doc"))
         .union(base.select(F.col("v").alias("doc")))
@@ -874,6 +796,10 @@ def components_star(
         "doc",
         "left",
     ).select("doc", F.coalesce("component", F.col("doc")).alias("component"))
+
+
+# the one connected-components operator, under the name its consumers use
+dedup_components = components_star
 
 
 def decontaminate(

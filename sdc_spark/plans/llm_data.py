@@ -1169,9 +1169,10 @@ oracle(
 @query("dedup_components")
 def dedup_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over verified near-dup pairs (J ≥ 0.8) — the
-    cluster-grouping step after pair finding: iterative min-label
-    propagation (Pregel-lite, one shuffle per round, lineage truncated per
-    iteration). Oracle: DuckDB recursive-CTE transitive closure."""
+    cluster-grouping step after pair finding: union-find on the driver
+    while the edge set fits `LOCAL_FINISH_EDGES`, large-star/small-star
+    rounds beyond it (one operator, shared with `dedup_components_star`).
+    Oracle: DuckDB recursive-CTE transitive closure."""
     pairs = sdedup.minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id", threshold=0.8
     )
@@ -1215,14 +1216,13 @@ _COMPONENTS_ORACLE = f"""
 
 @query("dedup_components_star")
 def dedup_components_star_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al. SoCC'14) over the same verified near-dup pairs as
-    `dedup_components` — the diameter-INDEPENDENT scale path: min-label
-    propagation needs diameter rounds (chain-shaped components at 100 TB
-    make that unbounded, and it now fails loudly past max_iter), where
-    the star alternation halves tree heights every round and converges
-    in O(log n) rounds. Identical deterministic contract (component =
-    min doc id), same recursive-CTE oracle."""
+    """Connected components via `components_star` over the same verified
+    near-dup pairs as `dedup_components` (the same operator under its
+    own name): a small edge set finishes with union-find on the driver,
+    a large one runs alternating large-star/small-star (Kiveris et al.
+    SoCC'14), O(log n) rounds regardless of component diameter.
+    Deterministic contract (component = min doc id), same recursive-CTE
+    oracle."""
     pairs = sdedup.minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id", threshold=0.8
     )
@@ -1447,8 +1447,9 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster size distribution — the dedup audit readout
     operators teams actually look at (how much of the corpus sits in
     2-clusters vs mega-clusters). Derived from the connected components
-    (Pregel-lite min-label, one shuffle per round); the histogram itself
-    is two tiny aggregates over one row per doc."""
+    (`dedup_components`: driver union-find for a small edge set, star
+    rounds beyond it); the histogram itself is two tiny aggregates over
+    one row per doc."""
     doc = _t(spark, sf_dir, "documents")
     pairs = sdedup.minhash_lsh_pairs(doc, "text", "doc_id", threshold=0.8)
     comp = sdedup.dedup_components(pairs)

@@ -5,7 +5,8 @@ threshold — and emitting the per-stage manifest (doc count + token
 budget) a release report is built from.
 
 Every stage reuses an operator that is ALREADY individually graded
-(exact_dedup, minhash_lsh_pairs → dedup_components →
+(exact_dedup, minhash_lsh_pairs → dedup_components (union-find on the
+driver for a small edge set, large-star/small-star rounds beyond it) →
 keep_best_in_cluster, decontaminate, quality_score), so this query pins
 their COMPOSITION: stage boundaries are where pipelines break (a
 survivor set fed to the wrong side of an anti-join, a benchmark that

@@ -48,3 +48,40 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def cc_exit(monkeypatch):
+    """``run(bound, fn)`` calls ``fn()`` with the connected-components
+    local-finish bound set to ``bound`` (None keeps the default) and
+    returns (fn's result, the exit the operator took): "rounds" (star
+    rounds only), "mid-round" (a round's residual edge set finished on
+    the driver) or "pre-round" (the whole graph finished on the driver
+    before any round)."""
+    from sdc_spark.operators import dedup
+
+    min_labels, round_pin = dedup._min_labels, dedup._materialize_iter_lazy
+    default = dedup.LOCAL_FINISH_EDGES
+
+    def run(bound, fn):
+        seen = {"rounds": 0, "finishes": 0}
+
+        def finish(edges):
+            seen["finishes"] += 1
+            return min_labels(edges)
+
+        def pin(df):
+            seen["rounds"] += 1
+            return round_pin(df)
+
+        monkeypatch.setattr(dedup, "_min_labels", finish)
+        monkeypatch.setattr(dedup, "_materialize_iter_lazy", pin)
+        monkeypatch.setattr(
+            dedup, "LOCAL_FINISH_EDGES", default if bound is None else bound
+        )
+        out = fn()
+        if not seen["finishes"]:
+            return out, "rounds"
+        return out, "mid-round" if seen["rounds"] else "pre-round"
+
+    return run

@@ -58,19 +58,17 @@ def test_normalized_text(spark):
     assert df.select(normalized_text("t").alias("n")).collect()[0].n == "a b c"
 
 
-def test_components_star_matches_ground_truth(spark):
-    """Both components implementations pinned against a union-find ground
-    truth on adversarial shapes: a 100-node chain (diameter stresses LP's
-    round count; the re-hanging stresses LSS), a clique, singleton
+def test_components_star_matches_ground_truth(spark, cc_exit):
+    """The connected-components operator pinned against a union-find
+    ground truth on adversarial shapes: a 100-node chain (long diameter;
+    the re-hanging stresses large-star/small-star), a clique, singleton
     self-pairs, and a seeded random graph — one edge list, so
-    cross-component interference is exercised too. Also pins that LP
-    FAILS LOUDLY when max_iter < diameter instead of silently returning
-    mislabeled far nodes (the bug this test originally caught)."""
+    cross-component interference is exercised too. Run through all three
+    exits: rounds only, a finish on a round's residual edge set, and a
+    finish on the whole graph before any round."""
     import random
 
-    import pytest
-
-    from sdc_spark.operators.dedup import components_star, dedup_components
+    from sdc_spark.operators.dedup import components_star
 
     rng = random.Random(7)
     edges = [(i, i + 1) for i in range(100, 200)]          # chain, comp min 100
@@ -95,13 +93,29 @@ def test_components_star_matches_ground_truth(spark):
             parent[max(ra, rb)] = min(ra, rb)
     truth = {(n, find(n)) for n in parent}
 
+    # the fixpoint star graph has one edge per non-minimum node; the
+    # clique's redundant edges keep the input above that, so a bound of
+    # exactly that size fails the pre-round read and fits a later round
+    star_edges = len(truth) - len({c for _, c in truth})
+    assert len({(max(e), min(e)) for e in edges}) > star_edges
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    ss = {(r.doc, r.component) for r in components_star(df).collect()}
-    assert ss == truth
-    lp = {(r.doc, r.component) for r in dedup_components(df, max_iter=150).collect()}
-    assert lp == truth
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(df, max_iter=5).collect()
+    for bound, exit_ in ((0, "rounds"), (star_edges, "mid-round"), (None, "pre-round")):
+        got = cc_exit(
+            bound, lambda: {(r.doc, r.component) for r in components_star(df).collect()}
+        )
+        assert got == (truth, exit_), bound
+
+
+def test_components_star_empty_pairs(spark, cc_exit):
+    """No pairs: an empty (doc, component) frame typed like the ids, on
+    the rounds path and on the driver finish."""
+    from sdc_spark.operators.dedup import components_star
+
+    df = spark.createDataFrame([], "doc_a int, doc_b int")
+    for bound, exit_ in ((0, "rounds"), (None, "pre-round")):
+        out, took = cc_exit(bound, lambda: components_star(df))
+        assert out.dtypes == [("doc", "int"), ("component", "int")], bound
+        assert (out.collect(), took) == ([], exit_), bound
 
 
 def test_lsh_params_for_threshold_properties():

@@ -154,21 +154,27 @@ def test_ann_ivf_recall(spark, sf_dir):
     assert {(r.qid, r.rank, r.nid) for r in run1} == run2
 
 
-def test_dedup_components_chain(spark):
-    """Min-label propagation must traverse chains (1-2, 2-3, 3-4 → one
-    component labeled 1) and keep disjoint clusters apart."""
+def test_dedup_components_chain(spark, cc_exit):
+    """Connected components must traverse chains (1-2, 2-3, 3-4 → one
+    component labeled 1) and keep disjoint clusters apart. This forest
+    already has the star graph's edge count (6), so no round can shrink
+    it: a bound of 5 fails the pre-round read and runs the rounds on the
+    lazily pinned base; 0 runs them on the eagerly pinned one."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
         "doc_a long, doc_b long",
     )
-    got = {
-        (r.doc, r.component) for r in sdedup.dedup_components(pairs).collect()
-    }
-    assert got == {
+    want = {
         (1, 1), (2, 1), (3, 1), (4, 1),
         (10, 10), (11, 10),
         (20, 20), (21, 20), (22, 20),
     }
+    for bound, exit_ in ((0, "rounds"), (5, "rounds"), (None, "pre-round")):
+        got = cc_exit(
+            bound,
+            lambda: {(r.doc, r.component) for r in sdedup.dedup_components(pairs).collect()},
+        )
+        assert got == (want, exit_), bound
 
 
 def test_pack_sequences_deterministic_and_exact(spark):

@@ -7,12 +7,10 @@ Pins the r12 mechanisms no other test observes directly:
    forced broadcast of billions of keys OOMs the driver at corpus
    scale; AQE must be free to pick per edge.
 2. ``dedup_components`` loudly rejects non-integral id columns (the
-   exact label-sum convergence check is not injective for strings or
-   floats — with ANSI off a string id silently returned WRONG labels).
-3. ``dedup_components`` converges when the component diameter equals
-   ``max_iter`` exactly: sum-equality observes the fixpoint one fused
-   block late, and the final uncounted single-round probe rescues the
-   boundary instead of raising spuriously.
+   driver-side finish and the distributed rounds must order ids
+   identically, which only integers guarantee).
+3. ``dedup_components`` labels a chain whose diameter equals
+   ``max_iter`` exactly (it once raised spuriously at that boundary).
 4. The fused release-manifest tail reports n_docs = 0 (not NULL) for an
    empty stage-3 frame, matching the pre-fusion F.count behavior.
 5. ``run_concurrently`` chains simultaneous failures: the re-raised
@@ -69,28 +67,15 @@ def test_dedup_components_rejects_non_integral_ids(spark):  # noqa: F811
 def test_dedup_components_converges_at_diameter_boundary(spark):  # noqa: F811
     from sdc_spark.operators.dedup import dedup_components
 
-    # chain 1-2-3-4: diameter 3. With max_iter=3 the loop exhausts before
-    # sum-equality can be OBSERVED (it needs one no-op block); the final
-    # uncounted probe must confirm the fixpoint instead of raising.
+    # chain 1-2-3-4: diameter 3 == max_iter. The operator's round count
+    # does not depend on the diameter, and this graph finishes on the
+    # driver before any round; either way it must not raise.
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], "doc_a long, doc_b long"
     )
     out = dedup_components(pairs, max_iter=3)
     got = {(r["doc"], r["component"]) for r in out.collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1)}
-
-
-def test_dedup_components_still_raises_when_under_iterated(spark):  # noqa: F811
-    from sdc_spark.operators.dedup import dedup_components
-
-    # chain of 8 nodes: diameter 7 > max_iter=3 (+1 probe round) — far
-    # nodes genuinely mislabeled, so the loud failure must survive the
-    # boundary-probe change.
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(pairs, max_iter=3)
 
 
 def test_release_tail_empty_reports_zero_docs(spark):  # noqa: F811
@@ -148,17 +133,24 @@ def test_materialize_lazy_single_computation(spark):  # noqa: F811
     unmaterialize(lazy)
 
 
-def test_components_star_keeps_self_pair_nodes(spark):  # noqa: F811
+def test_components_star_keeps_self_pair_nodes(spark, cc_exit):  # noqa: F811
     from sdc_spark.operators.dedup import components_star
 
     # (5,5) is a self-pair: its node must survive into the output as its
-    # own singleton component (the r12 base-frame rewrite derives the
-    # terminal node set from the materialized base, which keeps self-pairs)
+    # own singleton component on every exit (the rounds and the mid-round
+    # finish derive the terminal node set from the materialized base,
+    # which keeps self-pairs; the pre-round finish reads them directly).
+    # 3 base rows against 2 star edges: a bound of 2 exits mid-round.
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 5)], "doc_a long, doc_b long"
     )
-    got = {(r["doc"], r["component"]) for r in components_star(pairs).collect()}
-    assert got == {(1, 1), (2, 1), (3, 1), (5, 5)}
+    want = {(1, 1), (2, 1), (3, 1), (5, 5)}
+    for bound, exit_ in ((0, "rounds"), (2, "mid-round"), (None, "pre-round")):
+        got = cc_exit(
+            bound,
+            lambda: {(r["doc"], r["component"]) for r in components_star(pairs).collect()},
+        )
+        assert got == (want, exit_), bound
 
 
 def test_salted_block_self_join_emits_each_pair_once(spark):  # noqa: F811
